@@ -6,6 +6,12 @@
         --run-id <id> [--buckets 256] [--wave 16] [--salt 1024] \
         [--no-markdown]
 
+Each wave of --wave buckets runs one Spark job (its write), so a run is
+one input-schema job plus one job per wave. The wave commits from the
+driver: landed row counts come from the parquet footers under --output and
+one lineage file is appended to --output/_lineage, so the driver must be
+able to open --output through pyarrow (a local or mounted path).
+
 Resumable: rerunning with the same --run-id and --output skips buckets
 whose lineage rows are committed (see pdf_inspector_spark.lineage).
 Build the zip with:  python jobs/build_pyfiles.py

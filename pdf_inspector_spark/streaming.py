@@ -141,11 +141,14 @@ def stream_pipeline_with_lineage(spark: SparkSession, input_dir: str,
     import pyspark.sql.functions as SF
     from pyspark.sql import Observation
 
+    from .lineage import LINEAGE_SCHEMA, append_lineage
     from .pipeline import run_pipeline
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out_path = os.path.join(output_dir, "turns")
     lineage_path = os.path.join(output_dir, "_lineage")
+    # the batch lineage table, keyed by micro-batch instead of bucket
+    lineage_schema = LINEAGE_SCHEMA.replace("bucket int", "batch_id long")
     stream = read_transcripts_stream(spark, input_dir)
     result = run_pipeline(stream, with_markdown=False)
 
@@ -184,13 +187,9 @@ def stream_pipeline_with_lineage(spark: SparkSession, input_dir: str,
                 n_q = batch_df.where(
                     SF.col("error_kind").isNotNull()).count()
             elapsed = time.monotonic() - t0
-            (spark.createDataFrame(
-                [(run_id, int(batch_id), n, n - n_q, n_q,
-                  n / elapsed if elapsed > 0 else 0.0)],
-                "run_id string, batch_id long, rows_in long, rows_out long, "
-                "rows_quarantined long, turns_per_sec double")
-             .withColumn("completed_at", SF.current_timestamp())
-             .write.mode("append").parquet(lineage_path))
+            append_lineage(lineage_path, lineage_schema,
+                           [(run_id, int(batch_id), n, n - n_q, n_q,
+                             n / elapsed if elapsed > 0 else 0.0)])
         finally:
             batch_df.unpersist()
 

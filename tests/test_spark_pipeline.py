@@ -127,6 +127,70 @@ def test_kill_and_resume(spark, tsmall_path, tmp_path):
     assert imbalanced.count() == 0, imbalanced.collect()
 
 
+def test_wave_commit_runs_one_job_per_wave(spark, tsmall_path, tmp_path):
+    """A wave's write is its only Spark job: landed counts come from
+    parquet footers and the lineage append is a driver-side file write.
+    8 buckets in waves of 2 → 1 input-schema job + 4 write jobs."""
+    import uuid
+
+    from pdf_inspector_spark.lineage import run_with_checkpoint
+    sc = spark.sparkContext
+    group = f"wave-commit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run_with_checkpoint(spark, tsmall_path, str(tmp_path / "out"), "jobs",
+                            num_buckets=8, buckets_per_wave=2,
+                            with_markdown=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1 + 4
+
+
+def test_lineage_schema_across_writers(spark, tmp_path):
+    """A Spark-written lineage file (the earlier writer) and a pyarrow
+    one read back as one table with LINEAGE_SCHEMA's types, and resume
+    sees the buckets of both."""
+    from pdf_inspector_spark.lineage import (LINEAGE_SCHEMA, append_lineage,
+                                             lineage_path,
+                                             read_completed_buckets)
+    out_dir = str(tmp_path)
+    path = lineage_path(out_dir)
+    (spark.createDataFrame([("r", 0, 10, 9, 1, 5.0)],
+                           LINEAGE_SCHEMA.rsplit(",", 1)[0])
+     .withColumn("completed_at", F.current_timestamp())
+     .write.mode("append").parquet(path))
+    append_lineage(path, LINEAGE_SCHEMA, [("r", 1, 7, 7, 0, 3.5)])
+
+    expected = spark.createDataFrame([], LINEAGE_SCHEMA).dtypes
+    lineage = spark.read.parquet(path)
+    assert lineage.dtypes == expected
+    rows = sorted(lineage.collect(), key=lambda r: r["bucket"])
+    assert [tuple(r)[:6] for r in rows] == [("r", 0, 10, 9, 1, 5.0),
+                                            ("r", 1, 7, 7, 0, 3.5)]
+    assert all(r["completed_at"] is not None for r in rows)
+    assert read_completed_buckets(spark, out_dir, "r") == {0, 1}
+    assert read_completed_buckets(spark, out_dir, "other") == set()
+
+
+def test_lineage_temp_file_is_ignored(spark, tmp_path):
+    """A crash between writing a lineage file and renaming it leaves a
+    ``_part-*.parquet`` temp file; neither resume nor Spark may read it."""
+    from pdf_inspector_spark.lineage import (LINEAGE_SCHEMA, append_lineage,
+                                             lineage_path,
+                                             read_completed_buckets)
+    out_dir = str(tmp_path / "out")
+    path = lineage_path(out_dir)
+    assert read_completed_buckets(spark, out_dir, "r") == set()
+    append_lineage(path, LINEAGE_SCHEMA, [("r", 2, 4, 4, 0, 1.0)])
+    staged = str(tmp_path / "staged")
+    append_lineage(staged, LINEAGE_SCHEMA, [("r", 1, 7, 7, 0, 3.5)])
+    (name,) = os.listdir(staged)
+    os.replace(os.path.join(staged, name), os.path.join(path, "_" + name))
+    assert read_completed_buckets(spark, out_dir, "r") == {2}
+    assert [r["bucket"] for r in spark.read.parquet(path).collect()] == [2]
+
+
 def test_binary_payload_column(spark, tmp_path):
     """The pipeline accepts raw binary payload columns too (not just the
     latin-1-carried string shape from input_hint)."""

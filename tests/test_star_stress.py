@@ -12,6 +12,7 @@ import math
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_inspector_spark.operators.dedup import star_components
 
@@ -55,14 +56,20 @@ def test_star_contraction_million_edge_graph(spark):
     assert elapsed < 360, f"star contraction took {elapsed:.0f}s"
 
 
-def test_observed_marker_equals_standalone_aggregate(spark):
+@pytest.mark.parametrize("persist", ["local", "parquet"])
+def test_observed_marker_equals_standalone_aggregate(spark, monkeypatch,
+                                                     persist):
     """The r7 end-of-round fuse moved the convergence marker from a
     standalone .agg().collect() job onto the round's materialize action
     as observed metrics (Dataset.observe). Pin the load-bearing
     equivalence: for the same edge set — including the empty one — the
     observed (n, h, h2) tuple must equal the direct aggregate, so
-    convergence detection is unchanged."""
+    convergence detection is unchanged. Both persist modes: the action
+    that fires the metrics is a localCheckpoint or a parquet write."""
     from pyspark.sql import Observation
+
+    from pdf_inspector_spark.operators import materialize
+    monkeypatch.setenv("PDF_INSPECTOR_PERSIST", persist)
 
     for pred in ("u >= 0", "u < 0"):   # non-empty and empty edge sets
         edges = (spark.range(97)
@@ -79,7 +86,7 @@ def test_observed_marker_equals_standalone_aggregate(spark):
                        F.count(F.lit(1)).alias("n"),
                        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
                        F.expr("bit_xor(xxhash64(u, v, 8191))").alias("h2"))
-         .localCheckpoint())
+         .transform(materialize))
         got = obs.get
         assert (got["n"], got["h"], got["h2"]) == \
             (direct["n"], direct["h"], direct["h2"])
