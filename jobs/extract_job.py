@@ -24,6 +24,13 @@ import json
 import sys
 
 
+def spark_conf() -> dict[str, str]:
+    """The job's session conf: session.py's engine settings under the
+    job's app name. It sets no master; spark-submit supplies one."""
+    from pdf_inspector_spark.session import ENGINE_CONF
+    return {"spark.app.name": "pdf-inspector-extract", **ENGINE_CONF}
+
+
 def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(description="pdf-inspector-spark extraction job")
     p.add_argument("--input", required=True)
@@ -38,15 +45,7 @@ def main(argv: list[str]) -> int:
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.appName("pdf-inspector-extract")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-             # serialized sort writer even for small reduce counts (core
-             # conf — must be set before the context exists); see
-             # session.py for the measured bypass-writer pathology
-             .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-             .getOrCreate())
+    spark = SparkSession.builder.config(map=spark_conf()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Scan splits must be ≫ total cores or wave quantization caps
     # utilization (measured: local[8] got 9 splits = 2 ragged waves;

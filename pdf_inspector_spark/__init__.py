@@ -14,4 +14,10 @@ Nothing in this package is copied from the reference; the kernels are
 re-derived from its observable behavior (file:line citations in docstrings).
 """
 
+from .worker_init import install_stat_checked_invalidation
+
 __version__ = "0.1.0"
+
+# every executor Python worker imports the package to unpickle a package
+# UDF, so the wrapper is installed in the workers too
+install_stat_checked_invalidation()

@@ -74,7 +74,6 @@ _WS = b"\x00\t\n\x0c\r "
 _TOKEN_RE = re.compile(rb"[^\s()<>\[\]{}/%]+")
 _REF_RE = re.compile(rb"(\d+)\s+R(?![A-Za-z0-9])")
 _DELIM = b"()<>[]{}/%"
-_WS_RE = re.compile(rb"[\x00\t\n\x0b\x0c\r ]*")
 _WS_COMMENT_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*(?:\n|$))*")
 _NAME_RE = re.compile(rb"[^\x00\t\n\x0b\x0c\r ()<>\[\]{}/%]*")
 # Fast path: an array containing only numbers (Widths, W, matrices, rects).
@@ -633,8 +632,6 @@ class Operation:
     def __repr__(self) -> str:
         return f"Op({self.operator} {self.operands})"
 
-
-_OPERATOR_RE = re.compile(rb"[^\s()<>\[\]{}/%]+")
 
 # Master tokenizer for content streams: one C-level scan classifies
 # integers, reals, names and operators; structured tokens ('(', '<', '[',
