@@ -14,8 +14,7 @@ from collections import OrderedDict
 
 from .detector import (DetectionConfig, PDF_TYPE_IMAGE, PDF_TYPE_MIXED,
                        PDF_TYPE_SCANNED, PDF_TYPE_TEXT, detect_pdf_type_mem)
-from .extractor import (ITEM_TEXT, TextItem, extract_text_with_positions_mem,
-                        group_into_lines)
+from .extractor import ITEM_TEXT, TextItem, group_into_lines
 from .markdown import MarkdownOptions, to_markdown_from_items
 
 # Content-addressed result LRU (per process / per executor). In transcript
@@ -41,12 +40,18 @@ def classify_mem(buf: bytes, config: DetectionConfig = DetectionConfig()) -> dic
         result["error_msg"] = None
         return result
     except Exception as exc:  # noqa: BLE001 — quarantine channel, never raise
-        return {
-            "pdf_type": None, "page_count": 0, "pages_sampled": 0,
-            "pages_with_text": 0, "confidence": 0.0, "title": None,
-            "ocr_recommended": False,
-            "error_kind": type(exc).__name__, "error_msg": str(exc)[:500],
-        }
+        return _failed_detection(exc)
+
+
+def _failed_detection(exc: Exception) -> dict:
+    """The detection result of a document that could not be loaded or
+    classified: nothing detected, the exception as the error fields."""
+    return {
+        "pdf_type": None, "page_count": 0, "pages_sampled": 0,
+        "pages_with_text": 0, "confidence": 0.0, "title": None,
+        "ocr_recommended": False,
+        "error_kind": type(exc).__name__, "error_msg": str(exc)[:500],
+    }
 
 
 def items_to_text_and_spans(items: list[TextItem], return_lines: bool = False):
@@ -83,18 +88,6 @@ def items_to_text_and_spans(items: list[TextItem], return_lines: bool = False):
     if return_lines:
         return "\n".join(parts), spans, (src, lines)
     return "\n".join(parts), spans
-
-
-def extract_turn_text(buf: bytes) -> dict:
-    """Extraction stage: positioned items → text + spans, error-as-row."""
-    try:
-        items = extract_text_with_positions_mem(buf)
-    except Exception as exc:  # noqa: BLE001
-        return {"text": None, "spans": [], "n_items": 0,
-                "error_kind": type(exc).__name__, "error_msg": str(exc)[:500]}
-    text, spans = items_to_text_and_spans(items)
-    return {"text": text, "spans": spans, "n_items": len(items),
-            "error_kind": None, "error_msg": None}
 
 
 def process_pdf_mem(buf: bytes,
@@ -153,12 +146,7 @@ def _process_pdf_mem_uncached(buf: bytes,
         detection["error_msg"] = None
     except Exception as exc:  # noqa: BLE001
         doc = None
-        detection = {
-            "pdf_type": None, "page_count": 0, "pages_sampled": 0,
-            "pages_with_text": 0, "confidence": 0.0, "title": None,
-            "ocr_recommended": False,
-            "error_kind": type(exc).__name__, "error_msg": str(exc)[:500],
-        }
+        detection = _failed_detection(exc)
     pdf_type = detection["pdf_type"]
     error_kind = detection["error_kind"]
     error_msg = detection["error_msg"]

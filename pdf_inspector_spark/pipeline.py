@@ -1,28 +1,29 @@
-"""The Spark pipeline DAG: scan → classify → route → (salted) extract →
-structure → window-ordered output + quarantine.
+"""The Spark extraction plans: one Arrow-batched pandas UDF over the
+payload, run per row (fused plan) or per distinct payload (dedup plan).
 
-Physical plan (SURVEY.md §4):
+Fused plan, ``run_pipeline`` (the deploy path, lineage.py):
 
     ParquetScan(transcripts, project: conv_id,turn_idx,text,…)
-      → ArrowEvalPython[classify_udf]           (no shuffle)
-      → Filter[route on cls.pdf_type]           (scanned rows exit early)
-      → Repartition[hash(conv_id, salt)]        (explicit skew salting —
-                                                 mega conversations spread
-                                                 across executors BEFORE the
-                                                 expensive extract UDF)
-      → ArrowEvalPython[extract_udf(+markdown)] (payload consumed here;
-                                                 dropped before any further
-                                                 shuffle — only derived
-                                                 columns move afterwards)
-      → union(early-exit rows) → Window[conv_id/turn_idx] ordering
+      → [Repartition[hash(conv_id, turn_idx) salt]]
+      → ArrowEvalPython[process_udf(guarded encode(text))]
+      → Project   (payload dropped; PROC_SCHEMA fields flattened)
 
+Dedup plan, ``run_pipeline_dedup``:
+
+    ParquetScan → partial/final first-agg on sha256(text):length
+      → ArrowEvalPython[process_udf] over distinct payloads → Project
+      → join back on the content key to the payload-free metadata scan
+
+Failures are rows, not exceptions: ``error_kind`` is set and the row
+lands in the quarantine sink. Ordering contract: ``with_turn_order``.
 All per-document logic lives in the kernels; this module is pure
 DataFrame orchestration, so Catalyst handles pushdown/pruning for
-everything outside the UDF boundaries.
+everything outside the UDF boundary.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import pandas as pd
@@ -31,20 +32,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 # --------------------------------------------------------------------------
-# Result schemas (SURVEY.md §1.1 Spark mapping)
+# Result schema (SURVEY.md §1.1 Spark mapping)
 # --------------------------------------------------------------------------
-
-CLS_SCHEMA = T.StructType([
-    T.StructField("pdf_type", T.StringType()),
-    T.StructField("page_count", T.IntegerType()),
-    T.StructField("pages_sampled", T.IntegerType()),
-    T.StructField("pages_with_text", T.IntegerType()),
-    T.StructField("confidence", T.FloatType()),
-    T.StructField("title", T.StringType()),
-    T.StructField("ocr_recommended", T.BooleanType()),
-    T.StructField("error_kind", T.StringType()),
-    T.StructField("error_msg", T.StringType()),
-])
 
 SPAN_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("start", T.IntegerType()),
@@ -54,15 +43,6 @@ SPAN_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("y", T.FloatType()),
     T.StructField("font_size", T.FloatType()),
 ]))
-
-EXT_SCHEMA = T.StructType([
-    T.StructField("text_out", T.StringType()),
-    T.StructField("spans", SPAN_SCHEMA),
-    T.StructField("n_items", T.IntegerType()),
-    T.StructField("markdown", T.StringType()),
-    T.StructField("error_kind", T.StringType()),
-    T.StructField("error_msg", T.StringType()),
-])
 
 PROC_SCHEMA = T.StructType([
     T.StructField("pdf_type", T.StringType()),
@@ -78,172 +58,108 @@ PROC_SCHEMA = T.StructType([
     T.StructField("processing_time_ms", T.LongType()),
 ])
 
+PROC_COLS = PROC_SCHEMA.fieldNames()
+
+# The PROC_SCHEMA row with nothing detected or extracted; error rows and
+# classify-only rows fill in from it.
+_EMPTY_ROW = {c: None for c in PROC_COLS} | {
+    "page_count": 0, "confidence": 0.0, "ocr_recommended": False,
+    "spans": [], "processing_time_ms": 0}
+
+
+def _error_row(kind: str, msg: str) -> dict:
+    return _EMPTY_ROW | {"error_kind": kind, "error_msg": msg}
+
 
 # --------------------------------------------------------------------------
-# Vectorized UDF stages (Arrow-batched; kernels imported on the executor)
+# The UDF (Arrow-batched; kernels imported on the executor)
 # --------------------------------------------------------------------------
 
-
-def _payload_bytes(payload) -> bytes:
-    """Accept both contract shapes: latin-1-carried string (input_hint)
-    and raw binary columns."""
-    if isinstance(payload, (bytes, bytearray)):
-        return bytes(payload)
-    return payload.encode("latin-1")
-
-
-@F.pandas_udf(CLS_SCHEMA)
-def classify_udf(payloads: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Classification stage (SURVEY.md §2.2). Iterator form so the kernel
-    import happens once per executor-python worker, not once per batch."""
-    from .kernels.pipeline import classify_mem
-    cols = ["pdf_type", "page_count", "pages_sampled", "pages_with_text",
-            "confidence", "title", "ocr_recommended", "error_kind", "error_msg"]
-    for batch in payloads:
-        rows = []
-        for payload in batch:
-            if payload is None:
-                rows.append({c: None for c in cols} | {
-                    "page_count": 0, "pages_sampled": 0, "pages_with_text": 0,
-                    "confidence": 0.0, "ocr_recommended": False,
-                    "error_kind": "NullPayload", "error_msg": "text is null"})
-                continue
-            try:
-                buf = _payload_bytes(payload)
-            except UnicodeEncodeError as exc:
-                # error-as-row: a payload string that cannot carry
-                # latin-1 bytes goes to the error channel, it does not
-                # fail the stage (SURVEY §2.1 error-channel contract).
-                rows.append({c: None for c in cols} | {
-                    "page_count": 0, "pages_sampled": 0,
-                    "pages_with_text": 0, "confidence": 0.0,
-                    "ocr_recommended": False,
-                    "error_kind": "UnicodeEncodeError",
-                    "error_msg": str(exc)[:500]})
-                continue
-            r = classify_mem(buf)
-            rows.append({c: r[c] for c in cols})
-        yield pd.DataFrame(rows, columns=cols)
-
-
-# Barrier against duplicate evaluation (see _make_process_udf below).
-classify_udf = classify_udf.asNondeterministic()
-
-
-def _extract_batch(batch: pd.Series, with_markdown: bool) -> pd.DataFrame:
-    from .kernels.extractor import extract_text_with_positions_mem
-    from .kernels.markdown import to_markdown_from_items
-    from .kernels.pipeline import items_to_text_and_spans
-    rows = []
-    for payload in batch:
-        if payload is None:
-            rows.append({"text_out": None, "spans": [], "n_items": 0,
-                         "markdown": None, "error_kind": "NullPayload",
-                         "error_msg": "text is null"})
-            continue
-        try:
-            items = extract_text_with_positions_mem(_payload_bytes(payload))
-            text, spans = items_to_text_and_spans(items)
-            md = to_markdown_from_items(items) if with_markdown else None
-            rows.append({"text_out": text, "spans": spans,
-                         "n_items": len(items), "markdown": md,
-                         "error_kind": None, "error_msg": None})
-        except Exception as exc:  # noqa: BLE001 — quarantine, never raise
-            rows.append({"text_out": None, "spans": [], "n_items": 0,
-                         "markdown": None, "error_kind": type(exc).__name__,
-                         "error_msg": str(exc)[:500]})
-    return pd.DataFrame(rows, columns=["text_out", "spans", "n_items",
-                                       "markdown", "error_kind", "error_msg"])
-
-
-@F.pandas_udf(EXT_SCHEMA)
-def extract_udf(payloads: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Extraction stage without the structure pass (SURVEY.md §2.3-2.5)."""
-    for batch in payloads:
-        yield _extract_batch(batch, with_markdown=False)
-
-
-@F.pandas_udf(EXT_SCHEMA)
-def extract_structure_udf(payloads: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Extraction + markdown structuring in one pass over the payload
-    (§2.3-2.7); one parse feeds both outputs."""
-    for batch in payloads:
-        yield _extract_batch(batch, with_markdown=True)
-
-
-def _make_process_udf(with_markdown: bool, use_cache: bool = True):
-    cols = ["pdf_type", "page_count", "confidence", "ocr_recommended",
-            "title", "text_out", "spans", "markdown", "error_kind",
-            "error_msg", "processing_time_ms"]
+@functools.cache
+def _process_udf(mode: str, use_cache: bool = True):
+    """The pandas UDF for ``mode`` ``classify`` / ``text`` / ``markdown``
+    over the two columns of ``_payload_args``. Iterator form, so the
+    kernel import happens once per executor Python worker, not once per
+    batch. ``use_cache=False`` bypasses the kernel's result LRU (perf
+    harnesses measure the raw kernel with it)."""
 
     @F.pandas_udf(PROC_SCHEMA)
-    def process_udf(payloads: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from .kernels.pipeline import process_pdf_mem
-        for batch in payloads:
+    def process_udf(batches: Iterator[tuple[pd.Series, pd.Series]]
+                    ) -> Iterator[pd.DataFrame]:
+        from .kernels.pipeline import classify_mem, process_pdf_mem
+        for payloads, unencoded in batches:
             rows = []
-            for payload in batch:
-                if payload is None:
-                    rows.append({c: None for c in cols} | {
-                        "page_count": 0, "confidence": 0.0,
-                        "ocr_recommended": False, "spans": [],
-                        "error_kind": "NullPayload",
-                        "error_msg": "text is null",
-                        "processing_time_ms": 0})
+            for payload, raw in zip(payloads, unencoded):
+                try:
+                    if raw is not None:
+                        payload = raw.encode("latin-1")
+                except UnicodeEncodeError as exc:
+                    # error-as-row: one undecodable turn must not fail
+                    # the stage (SURVEY §2.1 error-channel contract)
+                    rows.append(_error_row(type(exc).__name__, str(exc)[:500]))
                     continue
-                r = process_pdf_mem(_payload_bytes(payload),
-                                    with_markdown=with_markdown,
-                                    use_cache=use_cache)
-                r["text_out"] = r.pop("text")
-                rows.append({c: r[c] for c in cols})
-            yield pd.DataFrame(rows, columns=cols)
+                if payload is None:
+                    rows.append(_error_row("NullPayload", "text is null"))
+                elif mode == "classify":
+                    rows.append(_EMPTY_ROW | classify_mem(payload))
+                else:
+                    r = process_pdf_mem(payload,
+                                        with_markdown=mode == "markdown",
+                                        use_cache=use_cache)
+                    r["text_out"] = r.pop("text")
+                    rows.append(r)
+            yield pd.DataFrame(rows, columns=PROC_COLS)
 
-    # Nondeterministic marking is a Catalyst barrier: it stops the
-    # optimizer from duplicating this expensive UDF into both sides of a
-    # filter+project split (the output IS deterministic; only duplicate
-    # evaluation is being suppressed).
+    # Nondeterministic marking is a Catalyst barrier against duplicating
+    # this expensive UDF into both sides of a filter+project split (the
+    # output IS deterministic; only duplicate evaluation is suppressed).
     return process_udf.asNondeterministic()
-
-
-process_structure_udf = _make_process_udf(with_markdown=True)
-process_text_udf = _make_process_udf(with_markdown=False)
-# Cache-bypassing variants: perf harnesses use these to measure the raw
-# kernel (a distinct-document workload has no repeats to memoize).
-process_structure_udf_nocache = _make_process_udf(with_markdown=True,
-                                                  use_cache=False)
-process_text_udf_nocache = _make_process_udf(with_markdown=False,
-                                             use_cache=False)
 
 
 # --------------------------------------------------------------------------
 # DataFrame stages
 # --------------------------------------------------------------------------
 
-ROUTABLE_TYPES = ("text_based", "mixed")
+# Any character a latin-1 encode cannot carry (Java regex syntax).
+_NON_LATIN1 = "[^\\x{00}-\\x{FF}]"
 
 
-def _payload_expr(df: DataFrame, payload_col: str):
-    """The column fed to the Arrow boundary. A latin-1-carried STRING
-    payload (the input_hint shape) is encoded to BINARY on the JVM side
-    first: Arrow ships strings as UTF-8, which inflates high-bit bytes
-    2x and pays a charset conversion on both sides of the socket —
-    measured 95.7 → 76.7 µs/turn on the no-op-UDF floor (r5 ablation,
-    t-med n4). Spark 4's `encode` raises MALFORMED_CHARACTER_CODING on
-    a non-latin-1 payload, the same stage-level error the Python-side
-    `.encode("latin-1")` raised before, so semantics are unchanged;
-    `_payload_bytes` passes the resulting bytes straight through."""
-    dtype = dict(df.dtypes).get(payload_col)
-    col = F.col(payload_col)
-    return F.encode(col, "ISO-8859-1") if dtype == "string" else col
+def _payload_args(df: DataFrame):
+    """The UDF's two input columns: the payload as BINARY, and the raw
+    string of rows the JVM does not encode (NULL on every other row).
+
+    A latin-1-carried STRING payload (the input_hint shape) is encoded
+    on the JVM side: Arrow ships strings as UTF-8, which inflates
+    high-bit bytes 2x and pays a charset conversion on both sides of the
+    socket — measured 95.7 → 76.7 µs/turn on the no-op-UDF floor (r5
+    ablation, t-med n4). Spark's ``encode`` raises a job-fatal
+    MALFORMED_CHARACTER_CODING on a character above U+00FF, so such rows
+    skip it and cross as their string; the UDF's encode then fails
+    per row and the row is quarantined."""
+    text = F.col("text")
+    if dict(df.dtypes)["text"] != "string":
+        return text, F.lit(None).cast("string")
+    unencodable = text.rlike(_NON_LATIN1)
+    return (F.when(~unencodable, F.encode(text, "ISO-8859-1")),
+            F.when(unencodable, text))
 
 
-def with_classification(df: DataFrame, payload_col: str = "text") -> DataFrame:
-    """classify stage: cheap per-row struct column, no shuffle.
+def _extract(df: DataFrame, with_markdown: bool,
+             use_cache: bool = True) -> DataFrame:
+    """``df`` with the UDF applied to its ``text`` column: the payload is
+    dropped in the Project directly above the UDF and the PROC_SCHEMA
+    fields are flattened, so only derived columns reach any downstream
+    shuffle (SURVEY.md §7 "large payload shuffles")."""
+    udf = _process_udf("markdown" if with_markdown else "text", use_cache)
+    keep = [c for c in df.columns if c != "text"]
+    return (df.withColumn("proc", udf(*_payload_args(df)))
+            .select(*keep, *[F.col(f"proc.{c}").alias(c) for c in PROC_COLS]))
 
-    Takes the RAW payload column (not _payload_expr): the staged path's
-    contract is error-as-row for undecodable payloads, so the latin-1
-    encode must run inside the UDF's per-row guard, not JVM-side where
-    a failure is job-fatal."""
-    return df.withColumn("cls", classify_udf(F.col(payload_col)))
+
+def with_classification(df: DataFrame) -> DataFrame:
+    """Classification only: a PROC_SCHEMA struct column ``cls`` with the
+    detection fields set (text/spans/markdown stay NULL), no shuffle."""
+    return df.withColumn("cls", _process_udf("classify")(*_payload_args(df)))
 
 
 def salt_column(num_buckets: int, cols: tuple[str, str] = ("conv_id", "turn_idx")):
@@ -255,7 +171,6 @@ def salt_column(num_buckets: int, cols: tuple[str, str] = ("conv_id", "turn_idx"
 
 def run_pipeline(df: DataFrame, *, with_markdown: bool = True,
                  salt_buckets: int | None = None,
-                 payload_col: str = "text",
                  payload_cache: bool = True) -> DataFrame:
     """Full pipeline, fused single-pass plan:
 
@@ -263,13 +178,9 @@ def run_pipeline(df: DataFrame, *, with_markdown: bool = True,
 
     The classify→route→extract decision tree runs INSIDE the kernel
     (one parse per document, src/lib.rs routing semantics); scanned
-    rows early-exit within the same batch. This beats the two-branch
+    rows early-exit within the same batch. This beats a two-branch
     filter+union plan, where Catalyst evaluated the classify UDF up to
     4× per row (once per filter, once per project, per union branch).
-
-    The payload column is dropped in the Project directly above the UDF:
-    only derived columns participate in any downstream shuffle
-    (SURVEY.md §7 "large payload shuffles").
 
     Ordering contract: downstream consumers read under
     Window.partitionBy(conv_id).orderBy(turn_idx) — see ``with_turn_order``.
@@ -280,33 +191,10 @@ def run_pipeline(df: DataFrame, *, with_markdown: bool = True,
         # because the stage is per-row; ordering is restored by the
         # window contract downstream.
         df = df.repartition(salt_buckets, salt_column(salt_buckets))
-
-    if payload_cache:
-        udf = process_structure_udf if with_markdown else process_text_udf
-    else:
-        udf = (process_structure_udf_nocache if with_markdown
-               else process_text_udf_nocache)
-    proc = df.withColumn("proc", udf(_payload_expr(df, payload_col)))
-    out_cols = [c for c in df.columns if c != payload_col]
-    return proc.select(
-        *out_cols,
-        F.col("proc.pdf_type").alias("pdf_type"),
-        F.col("proc.page_count").alias("page_count"),
-        F.col("proc.confidence").alias("confidence"),
-        F.col("proc.ocr_recommended").alias("ocr_recommended"),
-        F.col("proc.title").alias("title"),
-        F.col("proc.text_out").alias("text_out"),
-        F.col("proc.spans").alias("spans"),
-        F.col("proc.markdown").alias("markdown"),
-        F.col("proc.error_kind").alias("error_kind"),
-        F.col("proc.error_msg").alias("error_msg"),
-        F.col("proc.processing_time_ms").alias("processing_time_ms"),
-    )
+    return _extract(df, with_markdown, payload_cache)
 
 
-def run_pipeline_dedup(df: DataFrame, *, with_markdown: bool = True,
-                       payload_col: str = "text",
-                       single_scan: bool = False) -> DataFrame:
+def run_pipeline_dedup(df: DataFrame, *, with_markdown: bool = True) -> DataFrame:
     """Dedup-aware extraction plan: express payload repetition in the
     PLAN instead of (only) the executor-local LRU.
 
@@ -316,23 +204,24 @@ def run_pipeline_dedup(df: DataFrame, *, with_markdown: bool = True,
              → ArrowEvalPython over DISTINCT payloads only
              → join derived columns back on the content key
 
-    Only distinct documents ever cross the JVM→Python Arrow boundary, and
-    payloads never ride a wide shuffle (the distinct exchange carries one
-    payload per (task × distinct-doc); the join back carries derived
-    columns + a ~70-char key). At 10^12 turns with heavy attachment reuse
-    this turns extraction cost from O(rows) into O(distinct docs) at the
-    PLAN level — Catalyst/AQE can see and size it, unlike the in-UDF LRU.
+    Only distinct documents cross the JVM→Python Arrow boundary, and
+    payloads never ride a wide shuffle (the join back carries derived
+    columns + a ~70-char key): extraction cost is O(distinct docs) at
+    the PLAN level, where Catalyst/AQE can see and size it.
     Content key = sha256 + payload length: chosen-prefix md5 collisions
     are practical and colliding PDF pairs are published, so an md5 key
     would let one crawled document silently adopt another's extraction;
     xxhash64's 64 bits birthday-collide near 10^9-10^10 distinct docs.
     The digest cost is negligible next to the parse it deduplicates.
 
+    The payload column is scanned twice (into the distinct aggregate and
+    to key the metadata side): re-scanning zstd parquet beat persisting
+    the keyed frame, two-scan 2.11s vs persist 3.16s (BENCH.md r4).
+
     Skew note: this plan needs NO conversation salting — the expensive
-    stage partitions by CONTENT hash, so a mega-conversation (many turns,
-    one conv_id) contributes only its distinct payloads, uniformly
-    spread. The only residual skew would be one payload dominating the
-    corpus, which collapses to a single distinct row (trivial work).
+    stage partitions by CONTENT hash, so a mega-conversation contributes
+    only its distinct payloads, and one payload dominating the corpus
+    collapses to a single distinct row.
 
     Results are identical to run_pipeline (the kernel is deterministic
     per payload) — asserted in tests/test_spark_pipeline.py."""
@@ -342,89 +231,16 @@ def run_pipeline_dedup(df: DataFrame, *, with_markdown: bool = True,
     # falls through to the sentinel — concat_ws would yield "".
     keyed = df.withColumn(
         "__pk",
-        F.coalesce(F.concat(F.sha2(F.col(payload_col), 256), F.lit(":"),
-                            F.length(F.col(payload_col)).cast("string")),
+        F.coalesce(F.concat(F.sha2(F.col("text"), 256), F.lit(":"),
+                            F.length(F.col("text")).cast("string")),
                    F.lit("__null_payload__")))
-    # Scan strategy: the default plan scans the payload column TWICE
-    # (once into the distinct-payload aggregate, once to key the
-    # metadata side of the join back). single_scan=True persists the
-    # keyed frame instead, so payload bytes are read from parquet once
-    # and both branches consume the persisted blocks — the trade is 2×
-    # columnar-scan I/O vs materializing every payload row uncompressed
-    # in executor storage. Measured A/B at t-large (1.63M turns) on 32
-    # pinned cores, interleaved best-of-2 (BENCH.md r4): two-scan 2.11s
-    # vs persist 3.16s — re-scanning zstd parquet beats the persist
-    # round trip by ~33%, so two-scan stays the default. At a real
-    # 100 TB deployment revisit with the storage layer's numbers: the
-    # crossover is where payload-scan bandwidth, not CPU, dominates.
-    if single_scan:
-        from pyspark.storagelevel import StorageLevel
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
     distinct = (keyed.groupBy("__pk")
-                .agg(F.first(payload_col, ignorenulls=False)
-                     .alias(payload_col)))
-    udf = process_structure_udf if with_markdown else process_text_udf
-    proc_cols = ["pdf_type", "page_count", "confidence", "ocr_recommended",
-                 "title", "text_out", "spans", "markdown", "error_kind",
-                 "error_msg", "processing_time_ms"]
-    processed = (distinct
-                 .withColumn("proc", udf(_payload_expr(distinct, payload_col)))
-                 .select("__pk", *[F.col(f"proc.{c}").alias(c)
-                                   for c in proc_cols]))
-    out_cols = [c for c in df.columns if c != payload_col]
-    return (keyed.drop(payload_col)
+                .agg(F.first("text", ignorenulls=False).alias("text")))
+    processed = _extract(distinct, with_markdown)
+    out_cols = [c for c in df.columns if c != "text"]
+    return (keyed.drop("text")
             .join(processed, "__pk")
-            .select(*out_cols, *proc_cols))
-
-
-def run_pipeline_staged(df: DataFrame, *, with_markdown: bool = True,
-                        salt_buckets: int | None = None,
-                        payload_col: str = "text") -> DataFrame:
-    """Two-stage routed plan (classify stage → filter → extract stage).
-
-    Kept for workloads that want the classification stage alone (cheap
-    selectivity stats / OCR routing without extraction) — e.g.
-    ``with_classification(df)``. For full extraction prefer
-    ``run_pipeline``: this plan re-evaluates the classify UDF on both
-    union branches.
-    """
-    classified = with_classification(df, payload_col)
-    routable = classified.where(F.col("cls.pdf_type").isin(*ROUTABLE_TYPES))
-    early_exit = classified.where(
-        ~F.col("cls.pdf_type").isin(*ROUTABLE_TYPES)
-        | F.col("cls.pdf_type").isNull())
-
-    if salt_buckets:
-        routable = routable.repartition(salt_buckets,
-                                        salt_column(salt_buckets))
-
-    udf = extract_structure_udf if with_markdown else extract_udf
-    # NOTE: deliberately NOT _payload_expr here. The staged extract path
-    # is the one place the latin-1 encode ran INSIDE the per-row
-    # try/except (_extract_batch "quarantine, never raise"), so a
-    # non-latin-1 payload produced an error row. A JVM-side F.encode
-    # would turn that row into a job-fatal MALFORMED_CHARACTER_CODING.
-    # The fused/dedup paths encoded outside any try (stage-fatal before
-    # AND after), so only they take the binary fast path.
-    extracted = routable.withColumn("ext", udf(F.col(payload_col)))
-    early_exit = early_exit.withColumn("ext", F.lit(None).cast(EXT_SCHEMA))
-
-    out_cols = [c for c in df.columns if c != payload_col]
-    projection = [*out_cols,
-                  F.col("cls.pdf_type").alias("pdf_type"),
-                  F.col("cls.page_count").alias("page_count"),
-                  F.col("cls.confidence").alias("confidence"),
-                  F.col("cls.ocr_recommended").alias("ocr_recommended"),
-                  F.col("cls.title").alias("title"),
-                  F.col("ext.text_out").alias("text_out"),
-                  F.col("ext.spans").alias("spans"),
-                  F.col("ext.markdown").alias("markdown"),
-                  F.coalesce(F.col("cls.error_kind"),
-                             F.col("ext.error_kind")).alias("error_kind"),
-                  F.coalesce(F.col("cls.error_msg"),
-                             F.col("ext.error_msg")).alias("error_msg")]
-    return extracted.select(*projection).unionByName(
-        early_exit.select(*projection))
+            .select(*out_cols, *PROC_COLS))
 
 
 def with_turn_order(result: DataFrame) -> DataFrame:
@@ -432,10 +248,3 @@ def with_turn_order(result: DataFrame) -> DataFrame:
     Window.partitionBy(conv_id).orderBy(turn_idx)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return result.withColumn("turn_rank", F.row_number().over(w))
-
-
-def split_quarantine(result: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantine) — failed rows route to a quarantine sink instead
-    of failing the job (error-channel contract, src/lib.rs:135-145)."""
-    return (result.where(F.col("error_kind").isNull()),
-            result.where(F.col("error_kind").isNotNull()))

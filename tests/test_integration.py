@@ -9,7 +9,7 @@ from pdf_inspector_spark.kernels.extractor import (TextItem, TextLine,
 from pdf_inspector_spark.kernels.markdown import (MarkdownOptions, to_markdown,
                                                   to_markdown_from_items,
                                                   to_markdown_from_lines)
-from pdf_inspector_spark.kernels.pipeline import classify_mem, extract_turn_text
+from pdf_inspector_spark.kernels.pipeline import classify_mem
 
 
 def make_text_item(text, x, y, font_size, page, font="Helvetica"):
@@ -267,7 +267,3 @@ class TestErrorHandling:
     def test_classify_invalid_buffer(self):
         r = classify_mem(b"not a pdf")
         assert r["error_kind"] is not None
-
-    def test_extract_invalid_buffer(self):
-        r = extract_turn_text(b"not a pdf")
-        assert r["error_kind"] is not None and r["text"] is None

@@ -7,7 +7,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from pdf_inspector_spark.pipeline import (run_pipeline, split_quarantine,
+from pdf_inspector_spark.corpus import corpus_payloads
+from pdf_inspector_spark.pipeline import (run_pipeline, run_pipeline_dedup,
                                           with_turn_order)
 from pdf_inspector_spark.transcripts import expected_turns
 
@@ -48,7 +49,8 @@ def test_turn_ordering_is_dense(result_df):
 
 
 def test_quarantine_routing(result_df):
-    good, quarantine = split_quarantine(result_df)
+    good = result_df.where(F.col("error_kind").isNull())
+    quarantine = result_df.where(F.col("error_kind").isNotNull())
     expected = expected_turns("t-small")
     n_bad = sum(1 for e in expected if e["error_kind"] is not None)
     assert quarantine.count() == n_bad
@@ -197,7 +199,6 @@ def test_binary_payload_column(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdf_inspector_spark.corpus import corpus_payloads
     payloads = corpus_payloads()
     rows = [("c-0", i, payloads[d])
             for i, d in enumerate(["tj_basic", "scanned_only", "malformed"])]
@@ -238,7 +239,6 @@ def test_dedup_plan_identical_to_row_plan(spark, tsmall_path, result_df):
     """run_pipeline_dedup (distinct-payload plan) must produce rows
     identical to the per-row plan, including NULL-payload quarantine
     rows (sentinel join key)."""
-    from pdf_inspector_spark.pipeline import run_pipeline_dedup
     df = spark.read.parquet(tsmall_path)
     cols = ["conv_id", "turn_idx", "pdf_type", "text_out", "markdown",
             "error_kind"]
@@ -251,19 +251,26 @@ def test_dedup_plan_identical_to_row_plan(spark, tsmall_path, result_df):
     d = sorted(map(str, with_turn_order(
         run_pipeline(withnull, with_markdown=True)).select(cols).collect()))
     assert c == d
-    # the single-scan (persist) variant is plan-level equivalent too —
-    # the r4 A/B picked two-scan as default on throughput, not semantics
-    e = sorted(map(str, run_pipeline_dedup(df, single_scan=True)
-                   .select(cols).collect()))
-    assert e == b
     spark.catalog.clearCache()
+
+
+def test_plans_share_one_projection(spark, tsmall_path):
+    """Both plans end in the same flattened PROC_SCHEMA projection."""
+    df = spark.read.parquet(tsmall_path)
+    assert run_pipeline(df).dtypes == run_pipeline_dedup(df).dtypes
+
+
+def test_fused_plan_has_one_python_stage(spark, tsmall_path):
+    """The fused plan evaluates exactly one pandas UDF over the scan."""
+    df = spark.read.parquet(tsmall_path)
+    plan = run_pipeline(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_dedup_plan_shape(spark, tsmall_path):
     """The distinct stage must show a partial (map-side) aggregate — the
     combine that collapses duplicate payloads BEFORE the exchange — and
     the join back must not carry the payload column."""
-    from pdf_inspector_spark.pipeline import run_pipeline_dedup
     df = spark.read.parquet(tsmall_path)
     plan = (run_pipeline_dedup(df)._jdf.queryExecution()
             .executedPlan().toString())
@@ -284,7 +291,6 @@ def test_string_payload_crosses_arrow_boundary_as_binary(spark, tsmall_path):
     string transfer inflates high-bit bytes 2x and pays a charset
     conversion on both sides — BENCH.md r5 ablation). Pin the encode in
     the optimized plan for both the fused and dedup-aware pipelines."""
-    from pdf_inspector_spark.pipeline import run_pipeline_dedup
     df = spark.read.parquet(tsmall_path)
     assert dict(df.dtypes)["text"] == "string"
     for mk in (lambda: run_pipeline(df, with_markdown=False),
@@ -293,17 +299,46 @@ def test_string_payload_crosses_arrow_boundary_as_binary(spark, tsmall_path):
         assert "encode(" in plan or "Encode.encode" in plan, plan
 
 
-def test_staged_pipeline_quarantines_non_latin1_payload(spark):
-    """Code-review r5: the staged extract path must keep its per-row
-    quarantine for payloads that cannot carry latin-1 bytes (the encode
-    runs inside _extract_batch's try) — a JVM-side encode would fail the
-    whole job on one bad row."""
-    from pdf_inspector_spark.corpus import corpus_payloads
-    from pdf_inspector_spark.pipeline import run_pipeline_staged
+def _non_latin1_frame(spark):
+    """Three turns: a good PDF, the same PDF behind a character above
+    U+00FF (a string that cannot carry latin-1 bytes) and a NULL."""
     good = corpus_payloads()["tj_basic"].decode("latin-1")
-    rows = [("c-0", 0, good), ("c-0", 1, "bad€ payload" + good)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    out = {r["turn_idx"]: r
-           for r in run_pipeline_staged(df, with_markdown=False).collect()}
-    assert out[0]["text_out"] is not None
+    rows = [("c-0", 0, good), ("c-0", 1, "bad\u20ac payload" + good),
+            ("c-0", 2, None)]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string")
+
+
+@pytest.mark.parametrize("plan", [run_pipeline, run_pipeline_dedup],
+                         ids=lambda plan: plan.__name__)
+def test_non_latin1_payload_is_quarantined(spark, plan):
+    """The guarded JVM-side encode skips a non-latin-1 row and the UDF
+    turns it into an error row; the rest of the batch is unaffected
+    (an unguarded encode fails the whole job)."""
+    out = {r["turn_idx"]: r for r in
+           plan(_non_latin1_frame(spark), with_markdown=False).collect()}
+    assert out[0]["error_kind"] is None
+    assert out[0]["text_out"].startswith("Hello World")
     assert out[1]["error_kind"] == "UnicodeEncodeError"
+    assert "latin-1" in out[1]["error_msg"] and out[1]["text_out"] is None
+    assert out[2]["error_kind"] == "NullPayload"
+
+
+def test_non_latin1_payload_is_quarantined_in_a_wave(spark, tmp_path):
+    """In a deploy wave the non-latin-1 row lands under quarantined=true
+    and every bucket's lineage row balances."""
+    from pdf_inspector_spark.lineage import (read_quarantine, read_turns,
+                                             run_with_checkpoint)
+    src = str(tmp_path / "src")
+    _non_latin1_frame(spark).write.parquet(src)
+    out_dir = str(tmp_path / "out")
+    run_with_checkpoint(spark, src, out_dir, "r", num_buckets=2,
+                        buckets_per_wave=2, with_markdown=False)
+    assert [r["turn_idx"] for r in read_turns(spark, out_dir).collect()] == [0]
+    kinds = {r["turn_idx"]: r["error_kind"]
+             for r in read_quarantine(spark, out_dir).collect()}
+    assert kinds == {1: "UnicodeEncodeError", 2: "NullPayload"}
+    lineage = spark.read.parquet(os.path.join(out_dir, "_lineage")).collect()
+    assert sum(r["rows_in"] for r in lineage) == 3
+    assert all(r["rows_in"] == r["rows_out"] + r["rows_quarantined"]
+               for r in lineage)
